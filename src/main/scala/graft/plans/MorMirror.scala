@@ -41,10 +41,15 @@ import graft.sources.Tables.{TableProps, Warehouse}
   * Cost model at 100 TB:
   *  - write ([[appendDelta]]): fold + bucket the batch, write ONE small
   *    file set — O(delta), the base is never read or listed;
-  *  - read ([[read]]): base buckets with no delta rows stream through
-  *    untouched (bucket-level pruning — partition METADATA, not a join);
-  *    only touched buckets + deltas enter the latest-row fold, so the
-  *    merge shuffle is O(touched_base + deltas), not O(mirror);
+  *  - read ([[read]]): the deltas' keys are applied to the base BY KEY,
+  *    the read half of Iceberg v2's equality deletes. Base rows whose key
+  *    is in no delta pass straight through a left-anti join; only base
+  *    rows whose key is in a delta (left-semi join) enter the latest-row
+  *    fold with the delta rows. Both joins build on the delta key column,
+  *    so with small deltas Spark broadcasts it and the base is scanned
+  *    with no exchange: the merge shuffle is O(touched keys + deltas),
+  *    not O(mirror), whatever the bucket spec. The base schema comes from
+  *    its memoized footers, so opening a read runs no Spark job;
   *  - compaction ([[compact]]): folds accumulated deltas into a fresh base
   *    version (atomic pointer swap), bounding read-side merge debt. Crash
   *    between the swap and the delta GC is benign: re-folding an
@@ -101,25 +106,6 @@ object MorMirror {
       throw new IllegalStateException(s"MOR mirror '$name' not initialized"))
   }
 
-  private def deltaSpec(wh: Warehouse, name: String, dir: Path): Int = {
-    val p = dir.resolve(DeltaSpecMarker)
-    if (Files.exists(p)) Files.readString(p).trim.toInt
-    else storedConfig(wh, name).map(_._2).getOrElse(
-      throw new IllegalStateException(s"MOR mirror '$name' not initialized"))
-  }
-
-  /** Map one touched bucket under `spec` to the base-spec bucket(s) its
-    * keys can live in. EXACT when one modulus divides the other
-    * (`hash % kN % N == hash % N`), None when the two moduli share no
-    * such relation — the caller then contests the whole base
-    * (correct, un-pruned; the next [[compact]] re-unifies the specs).
-    */
-  private def mapBucketToBase(j: Int, spec: Int, baseSpec: Int): Option[Seq[Int]] =
-    if (spec == baseSpec) Some(Seq(j))
-    else if (spec % baseSpec == 0) Some(Seq(j % baseSpec))
-    else if (baseSpec % spec == 0) Some((j until baseSpec by spec).toSeq)
-    else None
-
   private def nested(wh: Warehouse, name: String): Warehouse =
     Warehouse(wh.tablePath(name), io = wh.io) // inherit the IO substrate
 
@@ -137,6 +123,10 @@ object MorMirror {
       k <- p.get(KeyProp); t <- p.get(TsProp); b <- p.get(BucketsProp)
     } yield (CdcConfig(k, t), b.toInt)
   }
+
+  private def config(wh: Warehouse, name: String): (CdcConfig, Int) =
+    storedConfig(wh, name).getOrElse(throw new IllegalStateException(
+      s"MOR mirror '$name' not initialized — no stored layout props"))
 
   /** Create the mirror from an initial state (e.g. a LOAD-file seed).
     * The seed may lack the CDC envelope entirely — its rows carry null
@@ -425,9 +415,7 @@ object MorMirror {
     */
   def appendDelta(
       wh: Warehouse, name: String, changes: DataFrame, batchId: Long): Unit = {
-    val (cfg, buckets) = storedConfig(wh, name).getOrElse(
-      throw new IllegalStateException(
-        s"MOR mirror '$name' not initialized — no stored layout props"))
+    val (cfg, buckets) = config(wh, name)
     // a batch id at or below the fold horizon would be INVISIBLE to every
     // read (the horizon filter excludes it) — silent data loss... UNLESS
     // it is the at-least-once REPLAY of the very batch whose appendDelta
@@ -467,10 +455,8 @@ object MorMirror {
     val folded = Cdc.fold(stamped, cfg)
     // cluster the delta by bucket before writing: the fold's key-hash
     // shuffle scatters each bucket across all partitions, which would
-    // write every file spanning every bucket — min/max stats useless and
-    // the read-side bucket filter scans every delta file. One extra
-    // DELTA-sized shuffle makes each file cover few buckets, so the
-    // touched-bucket read skips whole files on footer stats.
+    // write every file spanning every bucket (min/max stats useless).
+    // One extra DELTA-sized shuffle makes each file cover few buckets.
     //
     // ATOMIC publication: a concurrent compactor (the shared-warehouse
     // deployment: ingest JVM + maintenance JVM) lists delta dirs at any
@@ -525,9 +511,8 @@ object MorMirror {
           .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         // the delta's bucket SPEC and committed marker ride inside the
         // dir they describe, so the atomic publish below makes
-        // data+spec+publication visible together — what keeps a batch
-        // racing a concurrent resize readable (storedState maps each
-        // delta group's spec to the base's)
+        // data+spec+publication visible together — the layout stays
+        // self-describing across a concurrent resize
         Files.writeString(tmp.resolve(DeltaSpecMarker), buckets.toString)
         Files.writeString(tmp.resolve(DeltaCommittedMarker), "")
         Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -608,63 +593,55 @@ object MorMirror {
     deltaDirsAll(wh, name).filter(deltaId(_) > horizon)
   }
 
+  /** Rows of `df` whose key (every key column, null-safe — the fold
+    * groups null keys as one key) does (`left_semi`) or does not
+    * (`left_anti`) appear in `keys`. Semi and anti joins never duplicate
+    * a row, so the raw key column is the build side as is: no distinct,
+    * no extra shuffle, and Spark's size-based planning picks the join.
+    */
+  private def byKey(df: DataFrame, keys: DataFrame, cfg: CdcConfig,
+      how: String): DataFrame = {
+    val ks = cfg.keyCols.zipWithIndex.map { case (k, i) => k -> s"__mor_key$i" }
+    df.join(keys.select(ks.map { case (k, a) => col(k).as(a) }: _*),
+      ks.map { case (k, a) => col(k) <=> col(a) }.reduce(_ && _), how)
+  }
+
+  // widened reads + rename normalization on BOTH sides: base versions
+  // and delta batches may straddle an additive evolution (mergeSchema-
+  // style union), a numeric widening (mergeSchema refuses those — the
+  // explicit-widened-schema read is the replacement), or a declared
+  // rename (normalize folds the old name back into its history)
+  private def readBase(spark: SparkSession, wh: Warehouse, name: String): DataFrame =
+    graft.sources.SchemaEvolution.normalize(
+      graft.sources.SchemaEvolution.readTableWidened(
+        spark, nested(wh, name).snapshotPath(BaseTable)), wh, name)
+
+  private def readDeltas(spark: SparkSession, wh: Warehouse, name: String,
+      deltas: Seq[Path]): DataFrame =
+    graft.sources.SchemaEvolution.normalize(
+      graft.sources.SchemaEvolution.readWidened(spark, deltas.map(_.toString)),
+      wh, name)
+
   /** Stored rows (tombstones INCLUDED) merged at read time from an
-    * explicit delta-dir list — the bucket-pruned fold described in the
-    * object doc. Base partitions whose bucket appears in no delta pass
-    * through without entering the merge shuffle.
+    * explicit delta-dir list — the key-level fold described in the object
+    * doc. Base rows whose key is in no delta pass through the anti join
+    * without entering the merge shuffle. Keys, not buckets, decide, so
+    * the fold is exact for any pairing of base and delta bucket specs.
     */
   private def storedState(
       spark: SparkSession, wh: Warehouse, name: String,
       deltas: Seq[Path]): DataFrame = {
-    val (cfg, _) = storedConfig(wh, name).getOrElse(
-      throw new IllegalStateException(
-        s"MOR mirror '$name' not initialized — no stored layout props"))
-    val kb = PartitionedMirror.BucketCol
-    // widened reads + rename normalization on BOTH sides: base versions
-    // and delta batches may straddle an additive evolution (mergeSchema-
-    // style union), a numeric widening (mergeSchema refuses those — the
-    // explicit-widened-schema read is the replacement), or a declared
-    // rename (normalize folds the old name back into its history)
-    val base = graft.sources.SchemaEvolution.normalize(
-      graft.sources.SchemaEvolution.readTableWidened(
-        spark, nested(wh, name).snapshotPath(BaseTable)), wh, name)
+    val (cfg, _) = config(wh, name)
+    val base = readBase(spark, wh, name)
     if (deltas.isEmpty) return base
-    val delta = graft.sources.SchemaEvolution.normalize(
-      graft.sources.SchemaEvolution.readWidened(
-        spark, deltas.map(_.toString)), wh, name)
-    // touched-bucket list: bounded by the bucket modulus (partition
-    // METADATA, not data), same driver-collect contract as the COW path.
-    // SPEC-AWARE (bucket-layout evolution): each delta group's touched
-    // buckets — computed under the spec it was WRITTEN with — map to the
-    // base's spec before pruning. Exact when one modulus divides the
-    // other (the declared resize shape); any other pairing contests the
-    // whole base (un-pruned, still exact — the next compact re-unifies).
-    val baseSpec = baseBuckets(wh, name)
-    val groups = deltas.groupBy(deltaSpec(wh, name, _))
-    val baseTouched: Option[Seq[Int]] =
-      groups.foldLeft(Option(Seq.empty[Int])) { case (acc, (spec, dirs)) =>
-        acc.flatMap { seen =>
-          val touchedG = graft.sources.SchemaEvolution.readWidened(
-              spark, dirs.map(_.toString))
-            .select(kb).distinct().collect().map(_.getInt(0)).toSeq
-          val mapped = touchedG.map(mapBucketToBase(_, spec, baseSpec))
-          if (mapped.contains(None)) None
-          else Some(seen ++ mapped.flatten.flatten)
-        }
-      }.map(_.distinct.sorted)
-    val (untouchedBase, contestedBase) = baseTouched match {
-      case Some(t) =>
-        (base.filter(!col(kb).isin(t.map(Integer.valueOf): _*)),
-          base.filter(col(kb).isin(t.map(Integer.valueOf): _*)))
-      case None => (base.filter(lit(false)), base)
-    }
-    val contested = contestedBase.unionByName(delta, allowMissingColumns = true)
+    val delta = readDeltas(spark, wh, name, deltas)
     // one argmax by (ts, seq): stampBatchSeq's global seq ordering makes
     // this fold reproduce the sequential COW merge exactly (later batches
     // carry strictly larger seq, so equal-ts ties resolve to the newest
     // batch — the COW incoming-wins-ties rule)
-    val merged = Cdc.fold(contested, cfg)
-    merged.unionByName(untouchedBase, allowMissingColumns = true)
+    Cdc.fold(byKey(base, delta, cfg, "left_semi")
+        .unionByName(delta, allowMissingColumns = true), cfg)
+      .unionByName(byKey(base, delta, cfg, "left_anti"), allowMissingColumns = true)
   }
 
   /** The mirror's VISIBLE state: read-time merge, tombstones hidden,
@@ -675,62 +652,30 @@ object MorMirror {
       storedState(spark, wh, name, deltaDirs(wh, name))
         .drop(PartitionedMirror.BucketCol))
 
-  /** Stored rows (tombstones INCLUDED) in the buckets an incoming batch
-    * touches — the partition-pruned before-state the IVM deltas consume
-    * ([[graft.plans.IncrementalAgg.applyDelta]]), mirroring
-    * [[PartitionedMirror.touchedBefore]]: base partitions AND delta rows
-    * are both filtered to the incoming batch's bucket set before the
-    * read-time fold, so the lookup is O(touched + deltas_touched), not
-    * O(mirror).
+  /** Stored rows (tombstones INCLUDED) for the keys an incoming batch
+    * carries — the before-state the IVM deltas consume
+    * ([[graft.plans.IncrementalAgg.applyDelta]], which reads exactly
+    * those keys): base and live delta rows are both semi-joined on the
+    * batch's keys before the read-time fold, so the lookup is
+    * O(batch keys + deltas), not O(mirror).
     */
   def touchedBefore(spark: SparkSession, wh: Warehouse, name: String,
       changes: DataFrame): DataFrame = {
-    val (cfg, buckets) = storedConfig(wh, name).getOrElse(
-      throw new IllegalStateException(
-        s"MOR mirror '$name' not initialized — no stored layout props"))
-    val kb = PartitionedMirror.BucketCol
-    val touched = withBucket(changes, cfg, buckets)
-      .select(kb).distinct().collect().map(_.getInt(0)).sorted
-    // spec-aware pruning (bucket-layout evolution): the incoming batch's
-    // touched set is under the WRITE spec; the base filter maps it to the
-    // base's own spec (exact for divides-pairs, whole base otherwise),
-    // and delta rows are only bucket-filtered while every live delta
-    // shares the write spec — a mid-resize transition reads un-pruned
-    // deltas rather than missing rows (the next compact re-unifies)
-    val baseSpec = baseBuckets(wh, name)
+    val (cfg, _) = config(wh, name)
     val dd = deltaDirs(wh, name)
-    val baseMapped: Option[Seq[Int]] = touched
-      .map(mapBucketToBase(_, buckets, baseSpec))
-      .foldLeft(Option(Seq.empty[Int])) { (acc, m) =>
-        acc.flatMap(seen => m.map(seen ++ _))
-      }.map(_.distinct.sorted)
-    val base0 = graft.sources.SchemaEvolution.normalize(
-      graft.sources.SchemaEvolution.readTableWidened(
-        spark, nested(wh, name).snapshotPath(BaseTable)), wh, name)
-    val base = baseMapped match {
-      case Some(t) => base0.filter(col(kb).isin(t.map(Integer.valueOf): _*))
-      case None => base0
-    }
-    val deltasUniform = dd.forall(deltaSpec(wh, name, _) == buckets)
+    val base = byKey(readBase(spark, wh, name), changes, cfg, "left_semi")
     val all0 =
       if (dd.isEmpty) base
-      else {
-        val deltaAll = graft.sources.SchemaEvolution.normalize(
-          graft.sources.SchemaEvolution.readWidened(
-            spark, dd.map(_.toString)), wh, name)
-        base.unionByName(
-          if (deltasUniform)
-            deltaAll.filter(col(kb).isin(touched.map(Integer.valueOf): _*))
-          else deltaAll,
-          allowMissingColumns = true)
-      }
+      else base.unionByName(
+        byKey(readDeltas(spark, wh, name, dd), changes, cfg, "left_semi"),
+        allowMissingColumns = true)
     // a LOAD-seed base with no deltas yet has no ts/seq — align from the
     // incoming batch's types so the fold analyzes (null ts loses to all)
     val all = Seq(cfg.tsCol, Cdc.SeqCol).foldLeft(all0) { (df, c) =>
       if (df.columns.contains(c) || !changes.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(changes.schema(c).dataType))
     }
-    Cdc.fold(all, cfg).drop(kb)
+    Cdc.fold(all, cfg).drop(PartitionedMirror.BucketCol)
   }
 
   /** Number of un-compacted delta batches currently pending — the
@@ -746,8 +691,8 @@ object MorMirror {
     * after commits (the streaming sink does, `morCompactEvery`); static
     * writers own the same contract. Returns true when a compaction ran.
     * Choosing `maxPending`: the tail's read overhead is roughly
-    * (tail rows / base rows) extra scan plus one fold over touched
-    * buckets per delta file — single-digit thresholds keep reads within
+    * (tail rows / base rows) extra scan plus one fold over the touched
+    * keys per delta file — single-digit thresholds keep reads within
     * ~2x of a clean base scan at the measured scales (SCALE.md round-11
     * table); raise it only when write latency matters more than read
     * latency.
@@ -760,26 +705,22 @@ object MorMirror {
     *     [[compact]] — O(delta), not O(table));
     *  2. the write spec flips: every subsequent delta buckets by the new
     *     modulus and records it in its own dir ([[DeltaSpecMarker]]);
-    *  3. the base keeps its old layout and its own spec marker — reads
-    *     stay exact through the spec-aware bucket mapping in the fold
-    *     (a pre-marker base is stamped with its spec before the flip);
+    *  3. the base keeps its old layout and its own spec marker (a
+    *     pre-marker base is stamped with its spec before the flip); reads
+    *     stay exact because the fold matches base and delta rows by key,
+    *     never by bucket;
     *  4. the NEXT compaction rebuilds the base under the new spec as a
     *     side effect of its normal rewrite — the "background rewrite"
     *     costs nothing extra.
     *
-    * Pruning stays tight when one modulus divides the other (double/halve
-    * — `hash % kN % N == hash % N` makes the mapping exact); any other
-    * pairing is still correct but reads contest the whole base until
-    * that next compaction. Appends may continue throughout: a batch
-    * racing the flip carries whichever spec it read, declared in its own
-    * dir, and folds correctly either way.
+    * Appends may continue throughout: a batch racing the flip carries
+    * whichever spec it read, declared in its own dir, and folds correctly
+    * either way.
     */
   def resize(spark: SparkSession, wh: Warehouse, name: String,
       newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    val (_, old) = storedConfig(wh, name).getOrElse(
-      throw new IllegalStateException(
-        s"MOR mirror '$name' not initialized — no stored layout props"))
+    val (_, old) = config(wh, name)
     if (old == newBuckets) return
     compact(spark, wh, name) // fold the live tail under the old spec
     // a pre-marker base never resized: its data is under `old` — stamp
@@ -822,38 +763,26 @@ object MorMirror {
     */
   def expireTombstones(spark: SparkSession, wh: Warehouse, name: String,
       horizon: String): Unit = {
-    val (cfg, _) = storedConfig(wh, name).getOrElse(
-      throw new IllegalStateException(
-        s"MOR mirror '$name' not initialized — no stored layout props"))
+    val (cfg, _) = config(wh, name)
     compact(spark, wh, name)
     val nw = nested(wh, name)
     // same optimistic retry as compact: on conflict, re-read the rival's
     // base and re-apply the expiry to it
     nw.retryingConflicts() {
       val expect = nw.currentVersion(BaseTable)
-      val fold = foldedThrough(wh, name)
       // the rewrite preserves the base's PHYSICAL layout (existing _kb
       // values), so it must carry the base's spec marker too: after a
       // resize with an empty delta tail the base still holds the OLD
       // spec while the write props hold the NEW one, and an unmarked
-      // base falls back to the props — the fold would then map buckets
-      // under the wrong modulus and silently miss base rows (review
-      // finding, pinned by BucketResizeSpec's expire-mid-transition case)
-      val spec = baseBuckets(wh, name)
+      // base would fall back to the props and misdeclare its own layout
+      // (pinned by BucketResizeSpec's expire-mid-transition case)
       val df = graft.sources.SchemaEvolution.readTableWidened(
         spark, nw.snapshotPath(BaseTable))
-      if (df.columns.contains(graft.DmsEnvelope.OpCol)) {
-        val kept = df.filter(!coalesce(
+      if (df.columns.contains(graft.DmsEnvelope.OpCol))
+        commitBase(nw, expect, df.filter(!coalesce(
           col(graft.DmsEnvelope.OpCol) === graft.DmsEnvelope.Delete &&
-            col(cfg.tsCol) < lit(horizon), lit(false))).localCheckpoint(true)
-        nw.commit(BaseTable, expectCurrent = expect) { path =>
-          kept.write.mode(SaveMode.Overwrite)
-            .partitionBy(PartitionedMirror.BucketCol).parquet(path)
-          Files.writeString(Paths.get(path, BucketSpecMarker), spec.toString)
-          if (fold >= 0L)
-            Files.writeString(Paths.get(path, FoldedMarker), fold.toString)
-        }
-      }
+            col(cfg.tsCol) < lit(horizon), lit(false))),
+          baseBuckets(wh, name), foldedThrough(wh, name))
     }
   }
 
@@ -936,23 +865,39 @@ object MorMirror {
       val pinned = deltaDirs(wh, name)
       if (pinned.nonEmpty) {
         val expect = nw.currentVersion(BaseTable)
-        val kb = PartitionedMirror.BucketCol
-        val (cfg, buckets) = storedConfig(wh, name).get
-        val horizon = pinned.map(deltaId).max
-        val merged = storedState(spark, wh, name, pinned).drop(kb)
-        val staged = withBucket(merged, cfg, buckets).localCheckpoint(true)
-        beforeBaseCommit()
-        nw.commit(BaseTable, expectCurrent = expect) { path =>
-          staged.write.mode(SaveMode.Overwrite).partitionBy(kb).parquet(path)
-          // the rebuilt base re-buckets under the CURRENT write spec, so
-          // every compact after a resize IS the background spec rewrite;
-          // its marker swaps atomically with the data it describes
-          Files.writeString(Paths.get(path, BucketSpecMarker), buckets.toString)
-          Files.writeString(Paths.get(path, FoldedMarker), horizon.toString)
-        }
+        val (cfg, buckets) = config(wh, name)
+        val merged = storedState(spark, wh, name, pinned)
+          .drop(PartitionedMirror.BucketCol)
+        // the rebuilt base re-buckets under the CURRENT write spec, so
+        // every compact after a resize IS the background spec rewrite;
+        // its marker swaps atomically with the data it describes
+        commitBase(nw, expect, withBucket(merged, cfg, buckets), buckets,
+          pinned.map(deltaId).max)
         deltaDirsAll(wh, name).filter(deltaId(_) <= prevHorizon)
           .foreach(deleteRecursively)
       }
+    }
+  }
+
+  /** Commit `rows` (carrying `_kb`) as the next base version, with the
+    * spec and fold-horizon markers staged inside it so they swap with the
+    * data. The rows are re-clustered by `_kb` and materialized first: each
+    * bucket is then written by one task, so a version holds one file set
+    * per bucket however its rows arrived (pass-through rows come in scan
+    * partitions, folded ones in shuffle partitions — written as they
+    * come, every compaction would add files), and the commit never
+    * lazily re-reads files it is about to supersede.
+    */
+  private def commitBase(nw: Warehouse, expect: Option[Long], rows: DataFrame,
+      spec: Int, horizon: Long): Unit = {
+    val kb = PartitionedMirror.BucketCol
+    val staged = rows.repartition(col(kb)).localCheckpoint(true)
+    beforeBaseCommit()
+    nw.commit(BaseTable, expectCurrent = expect) { path =>
+      staged.write.mode(SaveMode.Overwrite).partitionBy(kb).parquet(path)
+      Files.writeString(Paths.get(path, BucketSpecMarker), spec.toString)
+      if (horizon >= 0L)
+        Files.writeString(Paths.get(path, FoldedMarker), horizon.toString)
     }
   }
 

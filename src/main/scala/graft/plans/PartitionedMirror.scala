@@ -150,15 +150,13 @@ object PartitionedMirror {
       // staging holds exactly the touched buckets' merged state)
       case graft.sources.ObjectStoreIO =>
         wh.partitionedOverwriteNoRename(out, name, Seq(BucketCol))
+      // per-write option, not the session conf: engine code never
+      // mutates session-global conf (a concurrent writer on the same
+      // session would inherit dynamic mode mid-flight)
       case _ =>
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try out.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
+        out.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
+          .option("partitionOverwriteMode", "dynamic")
           .parquet(wh.tablePath(name))
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
     }
   }
 }

@@ -1643,19 +1643,23 @@ object GraftCatalog {
 
   /** Sorted (relative path, size) census of the snapshot's VISIBLE data
     * files — the same visibility rules as `hasParquetFiles`. None when the
-    * dir is missing or the census exceeds [[SchemaMemoMaxFiles]]. */
-  private[sources] def schemaCensus(path: String): Option[Seq[(String, Long)]] = {
+    * dir is missing or the census exceeds [[SchemaMemoMaxFiles]]. With
+    * `partitionDirs`, a `_`-prefixed component containing `=` (a
+    * partition dir such as `_kb=3`) counts as visible, Spark's own
+    * listing rule for partition discovery. */
+  private[sources] def schemaCensus(path: String,
+      partitionDirs: Boolean = false): Option[Seq[(String, Long)]] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.isDirectory(p)) return Some(Seq.empty)
     // a concurrent retention GC deleting a version mid-walk throws from
     // the walk or the per-file size stat — degrade to the un-memoized
     // path (advice finding), exactly like the >1024-file case
-    try schemaCensusWalk(p)
+    try schemaCensusWalk(p, partitionDirs)
     catch { case _: java.io.IOException | _: java.io.UncheckedIOException =>
       None }
   }
 
-  private def schemaCensusWalk(p: java.nio.file.Path)
+  private def schemaCensusWalk(p: java.nio.file.Path, partitionDirs: Boolean)
       : Option[Seq[(String, Long)]] = {
     val s = java.nio.file.Files.walk(p)
     try {
@@ -1666,8 +1670,11 @@ object GraftCatalog {
         val nm = f.getFileName.toString
         if (nm.endsWith(".parquet") && !nm.startsWith("_") &&
             !nm.startsWith(".") &&
-            !p.relativize(f).iterator().asScala.exists(
-              c => c.toString.startsWith("_") || c.toString.startsWith("."))) {
+            !p.relativize(f).iterator().asScala.exists { c =>
+              val n = c.toString
+              n.startsWith(".") ||
+                (n.startsWith("_") && !(partitionDirs && n.contains("=")))
+            }) {
           if (out.size >= SchemaMemoMaxFiles) return None
           out += ((p.relativize(f).toString, java.nio.file.Files.size(f)))
         }

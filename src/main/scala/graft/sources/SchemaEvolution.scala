@@ -276,11 +276,6 @@ object SchemaEvolution {
     }
   }
 
-  /** [[readWidened]] for a TABLE directory: a `_kb=`-partitioned layout
-    * infers per bucket dir (partial bucket rewrites leave mixed widths
-    * across buckets) and keeps partition discovery; a flat/batch-subdir
-    * layout infers per immediate subdir.
-    */
   /** Driver-side uniform-footer schema shortcut (round 21): when a flat
     * layout's ≤64 visible data files all carry the SAME parquet schema,
     * the inference Spark would run as a distributed footer-merge JOB is
@@ -331,8 +326,18 @@ object SchemaEvolution {
     val census = censusOpt.orElse(fileCensus)
       .orElse(GraftCatalog.schemaCensus(path))
       .getOrElse(return None)
-    if (census.isEmpty || census.size > UniformSchemaMaxFiles) return None
     if (census.exists(_._1.contains("="))) return None
+    commonFooterSchema(spark, path, census)
+  }
+
+  /** The one parquet schema every file of `census` (paths relative to
+    * `path`) carries, nullable-relaxed; None when they differ, when the
+    * census is empty or over [[UniformSchemaMaxFiles]], or on any read
+    * failure. Decisions ride [[uniformMemo]], footers the footer memo.
+    */
+  private def commonFooterSchema(spark: SparkSession, path: String,
+      census: Seq[(String, Long)]): Option[StructType] = {
+    if (census.isEmpty || census.size > UniformSchemaMaxFiles) return None
     try {
       val memoKey = (path, census)
       val decided: Option[String] =
@@ -362,26 +367,59 @@ object SchemaEvolution {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** [[uniformFooterSchema]] for ONE level of integer partition dirs, such
+    * as the MOR base's and the bucketed mirror's `_kb=N/`: the files'
+    * common footer schema plus the partition column, typed as Spark's
+    * partition inference types integer values (IntegerType, nullable).
+    * Declines (None) to the inferring read on anything else: files beside
+    * or below the partition level, mixed partition names, a value that
+    * is not an int, a partition name that is also a data column, or
+    * partition type inference turned off.
+    */
+  private def uniformPartitionedSchema(spark: SparkSession,
+      root: String): Option[StructType] = {
+    if (!spark.sessionState.conf.partitionColumnTypeInferenceEnabled) return None
+    val census = GraftCatalog.schemaCensus(root, partitionDirs = true)
+      .getOrElse(return None)
+    val rel = census.map(_._1.split("/"))
+    if (!rel.forall(r => r.length == 2 && r(0).contains("="))) return None
+    val dirs = rel.map(_(0).split("=", 2))
+    val names = dirs.map(_(0)).distinct
+    if (names.size != 1 || !dirs.forall(_(1).toIntOption.isDefined)) return None
+    commonFooterSchema(spark, root, census)
+      .filterNot(_.fieldNames.contains(names.head))
+      .map(s => s.add(StructField(names.head, IntegerType, nullable = true)))
+  }
+
+  /** [[readWidened]] for a TABLE directory: a `_kb=`-partitioned layout
+    * infers per bucket dir (partial bucket rewrites leave mixed widths
+    * across buckets) and keeps partition discovery; a flat/batch-subdir
+    * layout infers per immediate subdir.
+    */
   def readTableWidened(spark: SparkSession, root: String): DataFrame = {
-    // driver-side shortcut first: a uniform flat snapshot reads under its
-    // footer schema with NO inference job (identical result — see
-    // uniformFooterSchema; heterogeneous/bucketed layouts decline and
-    // take the paths below unchanged)
+    // driver-side shortcuts first: a uniform flat snapshot reads under its
+    // footer schema with NO inference job, a uniform one-level integer-
+    // partitioned one under that schema plus the partition column
+    // (identical result — see uniformFooterSchema; heterogeneous layouts
+    // decline and take the paths below unchanged)
     uniformFooterSchema(spark, root).foreach { s =>
       return spark.read.schema(s)
         .option("recursiveFileLookup", "true").parquet(root)
+    }
+    val rp = Paths.get(root)
+    val isBucketed = Files.isDirectory(rp) && {
+      val s = Files.list(rp.toRealPath())
+      try s.iterator().asScala.exists(p =>
+        Files.isDirectory(p) && p.getFileName.toString.contains("="))
+      finally s.close()
+    }
+    if (isBucketed) uniformPartitionedSchema(spark, root).foreach { s =>
+      return spark.read.schema(s).parquet(root)
     }
     // FAST PATH: resolve the layout and try one plain mergeSchema read —
     // the pre-evolution behavior, byte-identical cost. Only a width
     // conflict falls through to the per-group widened merge below.
     try {
-      val rp = Paths.get(root)
-      val isBucketed = Files.isDirectory(rp) && {
-        val s = Files.list(rp.toRealPath())
-        try s.iterator().asScala.exists(p =>
-          Files.isDirectory(p) && p.getFileName.toString.contains("="))
-        finally s.close()
-      }
       val reader = spark.read.option("mergeSchema", "true")
       return if (isBucketed) reader.parquet(root)
       else reader.option("recursiveFileLookup", "true").parquet(root)

@@ -216,10 +216,10 @@ object CdcStream {
             val layout = stored.orElse(mirrorBuckets)
             val morStored = graft.plans.MorMirror.storedConfig(wh, table).isDefined
             val useMor = morStored || (mirrorMor && stored.isEmpty)
-            // Before-state for the IVM deltas, tombstones included. For the
-            // bucketed layout this is the partition-pruned touched-bucket
-            // read — O(touched + delta), the same pruning the mirror merge
-            // itself gets — NOT a full-mirror scan.
+            // Before-state for the IVM deltas, tombstones included: the
+            // partition-pruned touched-bucket read (bucketed COW) or the
+            // batch-key semi-join (MOR) — O(touched + delta), NOT a
+            // full-mirror scan.
             lazy val mirrorBefore: DataFrame =
               if (!exists) Cdc.fold(changes, spec.cdc).limit(0)
               else if (stored.isDefined) graft.plans.PartitionedMirror

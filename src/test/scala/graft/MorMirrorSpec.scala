@@ -226,18 +226,6 @@ class MorMirrorSpec extends SparkTestBase {
     assert(state(wh, "m") == want - ((2L, "b")) + ((2L, "b2")))
   }
 
-  test("read-side fold is bucket-pruned: contested base scan carries PartitionFilters") {
-    val wh = Warehouse(tmpDir("mor-prune"))
-    val initial = changes(
-      (1L, "a", "I", "t1"), (2L, "b", "I", "t1"), (3L, "c", "I", "t1"),
-      (4L, "d", "I", "t1"), (5L, "e", "I", "t1"), (6L, "f", "I", "t1"))
-    MorMirror.initialize(wh, "m", Cdc.fold(initial, cfg), cfg, N)
-    MorMirror.appendDelta(wh, "m", changes((1L, "a2", "U", "t2")), batchId = 1)
-    val plan = MorMirror.read(spark, wh, "m").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains(PartitionedMirror.BucketCol),
-      s"expected a bucket-pruned contested scan in:\n$plan")
-  }
-
   test("changesSince: the delta files ARE the incremental feed (cursor-gated, fold-exact)") {
     val wh = Warehouse(tmpDir("mor-feed"))
     val seed = Cdc.fold(changes((1L, "a", "I", "t1"), (2L, "b", "I", "t1")), cfg)

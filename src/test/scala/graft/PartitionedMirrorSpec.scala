@@ -45,9 +45,19 @@ class PartitionedMirrorSpec extends SparkTestBase {
         .toMap
     val before = bucketFiles
 
-    // one batch: update id=1, delete id=2
+    // one batch: update id=1, delete id=2. Dynamic overwrite rides a
+    // per-write option: the session conf stays exactly as the caller set
+    // it — static here, so were the option ignored the write would wipe
+    // every untouched bucket and the checks below would fail
     val batch = changes((1L, "a2", "U", "t2"), (2L, "b", "D", "t2"))
-    PartitionedMirror.applyBatch(spark, wh, "m", batch, cfg, N)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val callerMode = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "STATIC")
+    try {
+      PartitionedMirror.applyBatch(spark, wh, "m", batch, cfg, N)
+      assert(spark.conf.get(modeKey) == "STATIC",
+        "applyBatch must not touch the session's partitionOverwriteMode")
+    } finally callerMode.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
 
     // equivalence with the flat merge over the same history (visible state)
     val flat = Cdc.currentState(Cdc.applyBatch(Cdc.fold(initial, cfg), batch, cfg))
